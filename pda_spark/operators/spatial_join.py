@@ -52,16 +52,8 @@ def _arrow_stage_width(df: DataFrame) -> int:
     parallelism/2: an Arrow task runs ~2 busy processes (python worker +
     JVM feeder — BENCH/BASELINE.md §3), so cores/2 tasks saturate the
     machine without oversubscribing it (q45 refine A/B at sf1.0: width
-    32/16/8 -> 9.0/4.8/7.1 s). Env-tunable (PDA_ARROW_STAGE_WIDTH) for
-    deployments whose executor topology differs."""
-    import os
-
-    return int(
-        os.environ.get(
-            "PDA_ARROW_STAGE_WIDTH",
-            max(1, df.sparkSession.sparkContext.defaultParallelism // 2),
-        )
-    )
+    32/16/8 -> 9.0/4.8/7.1 s)."""
+    return max(1, df.sparkSession.sparkContext.defaultParallelism // 2)
 
 
 def _salted(df: DataFrame, salt: int, side: str) -> DataFrame:

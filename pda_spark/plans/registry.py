@@ -27,6 +27,7 @@ from pyspark.sql.functions import pandas_udf
 from pda_spark.functions import dedup, geo_udfs, graph, similarity, sketch, text
 from pda_spark.geo import wkb as W
 from pda_spark.operators import spatial_join
+from pda_spark.session import spread
 
 
 @pandas_udf(T.BinaryType())
@@ -1270,8 +1271,6 @@ def q79_buffer_area(spark, sf_dir):
     # the part scan is one sub-4MB split, so without this the whole
     # capsule-union kernel runs in ONE python worker (9.4 s at sf1.0 in
     # BENCH_r06 — the same single-split cause as q32/q82 in round 6)
-    from pda_spark.session import spread
-
     return spread(_part_rects(spark, sf_dir)).select(
         "p_partkey",
         F.round(geo_udfs.buffer_area_planar(d)(F.col("geom")), 4).alias("buf_area"),
@@ -1293,12 +1292,12 @@ def q82_erosion_area(spark, sf_dir):
     Rectangle erosion has sharp corners, so the closed form
     (w-2d)(h-2d) is EXACT — no arc discretization term at all."""
     d = 0.05
-    # post-shuffle spread of the Arrow kernel stage: the part scan is one
-    # sub-4MB split, so without this the whole erosion kernel runs in ONE
-    # python worker (15 s at sf0.1); post-shuffle Arrow width is safe on
-    # this host (BENCH/BASELINE.md §3 — only PRE-shuffle forced splits
-    # trip the throttle)
-    return _part_rects(spark, sf_dir).repartition(32).select(
+    # post-shuffle spread of the Arrow kernel stage, as in q79: the part
+    # scan is one sub-4MB split, so without this the whole erosion kernel
+    # runs in ONE python worker (15 s at sf0.1); post-shuffle Arrow width
+    # is safe (BENCH/BASELINE.md §3 — only PRE-shuffle forced splits trip
+    # the throttle)
+    return spread(_part_rects(spark, sf_dir)).select(
         "p_partkey",
         F.round(geo_udfs.buffer_area_planar(-d)(F.col("geom")), 6).alias("eroded_area"),
     )
@@ -3110,8 +3109,6 @@ def q60_vocabulary(spark, sf_dir):
     aggregation every tokenizer-training / corpus-stats pass runs. Two
     map-side-combinable shuffles on the word, then a 50-row window
     limit."""
-    from pda_spark.session import spread
-
     docs = _t(spark, sf_dir, "documents")
     # spread the 2-split documents scan before the explode (r07 pattern)
     toks = spread(docs).select(
